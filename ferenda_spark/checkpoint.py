@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,11 +70,23 @@ def entries_from_extracted(extracted: DataFrame, stage: str = "parse",
     )
 
 
-def read_entries(spark: SparkSession, path: str) -> DataFrame | None:
+def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None if nothing was ever
+    committed there: the path is missing, or it holds no data file (a
+    first write that crashed leaves only ``_temporary/``).  Any other
+    failure (a corrupt or unreadable file) raises: it must not pass for
+    an empty table."""
     try:
         return spark.read.parquet(path)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
+def read_entries(spark: SparkSession, path: str) -> DataFrame | None:
+    """The checkpoint; None before the first commit."""
+    return read_table(spark, path)
 
 
 def append_entries(entries: DataFrame, path: str) -> None:

@@ -80,8 +80,9 @@ Spark shape / scale notes:
 
 * Each triple pattern is a FILTERED SCAN of the triples table — its
   constant terms (pred almost always, often subj or obj too) become
-  pushed-down predicates, so at 100 TB a pattern touches only its
-  pred_bucket partitions.
+  pushed-down parquet predicates.  The log is partitioned by ``batch``
+  only (pipeline.py): there are no per-predicate partitions, so a
+  pattern scans every file of the batches it reads.
 * Patterns are joined GREEDILY in selectivity order (most bound
   constants first), always preferring a pattern that shares a variable
   with the solution built so far — a cartesian product only happens if

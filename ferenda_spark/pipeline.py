@@ -1,6 +1,6 @@
 """The end-to-end KG-construction job (north_star): web_pages ->
 extracted -> triples (+ entries, dependencies, metrics), materialized as
-partitioned tables.
+tables partitioned by ``batch``.
 
 Stage layout mirrors the reference's parse/relate actions
 (SURVEY.md §3.1/§3.2) with the process/node boundaries replaced by the
@@ -15,23 +15,28 @@ Spark scheduler:
      object URIs vs all documents, plus the prior graph's object URIs
      vs this batch's brand-new documents (broadcast); never a
      full-graph self-join per commit (canonicalize.py)
-  5. write: triples partitioned by (batch, pred_bucket, crawl_date) —
-     the Iceberg layout from SURVEY §1.3; parquet stand-in locally.
+  5. write: triples partitioned by ``batch`` only; parquet stand-in
+     locally for the Iceberg table.
 
-Partitioning rationale (100 TB): predicate frequency is Zipfian, so
-partitioning raw ``pred`` would produce a handful of huge partitions;
-``pred_bucket = pmod(xxhash64(pred), N_PRED_BUCKETS)`` bounds partition
-count while still enabling partition pruning for predicate-filtered
-queries.  crawl_date enables incremental-load pruning.
+Layout rationale: readers filter on ``pred = <iri>`` (the SPARQL
+compiler's pattern scans) or on ``batch`` (dynamic overwrite, relate's
+new/prior split), never on ``pred_bucket`` or ``crawl_date``, so those
+two are data columns, not directories, and a batch lands as one file
+per write task.  The ``pred`` filter is pushed into the parquet scan;
+the files are not sorted by ``pred``, so it skips row groups only by
+chance.  A log written in the earlier ``batch/pred_bucket/crawl_date``
+directory layout cannot be read together with batches in this one
+(Spark rejects conflicting directory structures); rebuild it from its
+input.
 
 Exactly-once incremental commits WITHOUT Iceberg's MERGE INTO: each
 run's pending set gets a deterministic ``batch`` id (hash of its
 (url, content) keys); extracted/triples/dependencies/metrics are
-written with DYNAMIC partition overwrite keyed on batch.  Re-running a
-failed batch overwrites only its own partitions (idempotent); completed
-batches are never touched; a no-op resume (empty pending set) writes
-nothing.  On Iceberg the same contract is a MERGE INTO / snapshot
-commit.
+written with DYNAMIC overwrite of the ``batch`` partition.  Re-running
+a failed batch overwrites only its own partition (idempotent);
+completed batches are never touched; a no-op resume (empty pending set)
+writes nothing.  On Iceberg the same contract is a MERGE INTO /
+snapshot commit.
 
 SUPERSEDE semantics (a re-crawled url replaces its old graph, like the
 reference's re-parse overwriting the distilled file): the raw batch
@@ -62,6 +67,8 @@ N_PRED_BUCKETS = 16
 
 
 def with_partition_cols(triples: DataFrame, warc_ts_by_url: DataFrame) -> DataFrame:
+    """Add the ``pred_bucket`` and ``crawl_date`` data columns of the
+    triple log."""
     t = triples.join(warc_ts_by_url, "url", "left")
     return (
         t.withColumn("pred_bucket",
@@ -72,9 +79,10 @@ def with_partition_cols(triples: DataFrame, warc_ts_by_url: DataFrame) -> DataFr
 
 
 def batch_id(todo: DataFrame) -> str:
-    """Deterministic id of a pending set: order-insensitive hash of its
-    (url, content) keys.  The same failed batch re-runs under the same
-    id => dynamic partition overwrite makes the retry idempotent."""
+    """Deterministic id ``<rows>x<hash>`` of a pending set: its row
+    count and an order-insensitive hash of its (url, content) keys.  The
+    same failed batch re-runs under the same id => dynamic partition
+    overwrite makes the retry idempotent."""
     # per-row hash reduced mod p, summed as decimal(38,0): overflow-free
     # (ANSI mode) up to ~10^28 rows
     p = 1_000_000_007
@@ -120,12 +128,10 @@ class RunResult:
 
 def _metrics_total(spark: SparkSession, out_dir: str,
                    col: str = "n_triples") -> int:
-    try:
-        row = (spark.read.parquet(f"{out_dir}/metrics")
-               .agg(F.sum(col).alias("s")).collect()[0])
-        return int(row["s"] or 0)
-    except Exception:
+    metrics = checkpoint.read_table(spark, f"{out_dir}/metrics")
+    if metrics is None:
         return 0
+    return int(metrics.agg(F.sum(col).alias("s")).collect()[0]["s"] or 0)
 
 
 def run(
@@ -144,7 +150,9 @@ def run(
     if input_partitions:
         todo = todo.repartition(input_partitions, "url")
 
-    if todo.isEmpty():
+    # one scan of the pending set: the id leads with its row count
+    batch = batch_id(todo)
+    if batch.startswith("0x"):
         # no-op resume: touch nothing (the destructive alternative —
         # overwriting the table with an empty batch — is exactly what
         # the checkpoint contract forbids)
@@ -154,7 +162,6 @@ def run(
             n_dependencies=0,
             wall_s=time.time() - t0, batch=None)
 
-    batch = batch_id(todo)
     commit_ts = time.time()
 
     obs_ext = Observation()
@@ -175,8 +182,8 @@ def run(
                    .withColumn("batch", F.lit(batch))
                    .withColumn("commit_ts", F.lit(commit_ts))
                    .observe(obs_tri, F.count(F.lit(1)).alias("n")))
-    (partitioned.write.mode("overwrite")
-     .partitionBy("batch", "pred_bucket", "crawl_date")
+    # one file per write task under batch=<id>/
+    (partitioned.write.mode("overwrite").partitionBy("batch")
      .parquet(f"{out_dir}/triples"))
     n_triples = int(obs_tri.get["n"])
 

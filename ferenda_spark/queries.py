@@ -2911,7 +2911,7 @@ def q_sparql_construct_annotations(spark, sf_dir):
     (documentrepository.py:2460-2488) to ALL documents in ONE join
     plan: the per-doc constant uri becomes ?root constrained to typed
     documents.  Scale shape: each triple pattern is a pred-filtered
-    scan (partition-prunable on pred_bucket), patterns join in
+    scan (the filter pushed into parquet), patterns join in
     selectivity order, the isPartOf* closure is depth-bounded
     self-joins of the tiny part-edge subset — never a driver loop."""
     from ferenda_spark.operators.sparql import sparql_query

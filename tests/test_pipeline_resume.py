@@ -1,7 +1,10 @@
 """Pipeline + checkpoint/resume + cross-document join tests
 (SURVEY.md §2 J2-J4, M6 exact resume; north_rule lineage)."""
 
+import pathlib
+
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from ferenda_spark import checkpoint, pipeline
@@ -124,15 +127,62 @@ def test_incremental_deps_scan_only_new_batch(spark, tmp_path_factory):
 
 
 def test_triples_partition_layout(spark, tmp_path_factory):
+    """A batch lands as at most one file per write task directly under
+    ``batch=<id>/``, and a ``pred = <iri>`` scan pushes its filter into
+    parquet."""
+    import pyarrow.parquet as pq
+
+    from ferenda_spark.ns import RDF_TYPE
+    from ferenda_spark.plans import audit
+
     out = str(tmp_path_factory.mktemp("layout"))
-    pages = web_pages_df(spark, 10)
-    pipeline.run(spark, pages, commondata_df(spark), out)
+    res = pipeline.run(spark, web_pages_df(spark, 10), commondata_df(spark),
+                       out)
+    files = sorted(pathlib.Path(out, "triples").rglob("*.parquet"))
+    assert files
+    # no nested partition directories below the batch
+    assert {f.parent for f in files} == {
+        pathlib.Path(out, "triples", f"batch={res.batch}")}
+    # a task names its files part-<task>-...: one file per task
+    assert len(files) == len({f.name.split("-")[1] for f in files})
+
     t = spark.read.parquet(f"{out}/triples")
-    assert set(["pred_bucket", "crawl_date"]).issubset(set(t.columns))
-    # partition pruning: filter on pred_bucket must hit a subset of files
-    one = t.where("pred_bucket = 3")
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "pred_bucket" in plan
+    assert {"pred_bucket", "crawl_date"} <= set(t.columns)
+    assert sum(pq.read_metadata(f).num_rows for f in files) == res.n_triples
+    assert audit.has_pushed_filter(t.where(F.col("pred") == RDF_TYPE),
+                                   f"EqualTo(pred,{RDF_TYPE})")
+
+
+def _corrupt_one_file(table_dir):
+    part = sorted(pathlib.Path(table_dir).rglob("*.parquet"))[0]
+    part.write_bytes(b"not a parquet file")
+    # drop the checksum so the read fails in parquet, not in the crc check
+    part.with_name(f".{part.name}.crc").unlink()
+
+
+def test_unreadable_tables_raise(spark, tmp_path_factory):
+    """A table that is missing, or that a crashed first write left with
+    only ``_temporary/``, reads as empty; one that holds a file it
+    cannot read raises instead of passing as empty — a corrupt
+    ``metrics`` must not report ``n_triples_total = 0``, and a corrupt
+    ``entries`` must not re-process the whole corpus."""
+    out = str(tmp_path_factory.mktemp("corrupt"))
+    entries = f"{out}/entries"
+    assert pipeline._metrics_total(spark, out) == 0
+    assert checkpoint.read_entries(spark, entries) is None
+    pathlib.Path(entries, "_temporary", "0").mkdir(parents=True)
+    pathlib.Path(out, "metrics", "_temporary", "0").mkdir(parents=True)
+    assert pipeline._metrics_total(spark, out) == 0
+    assert checkpoint.read_entries(spark, entries) is None
+
+    pipeline.run(spark, web_pages_df(spark, 4), commondata_df(spark), out,
+                 entries_path=entries)
+    _corrupt_one_file(f"{out}/metrics")
+    with pytest.raises(Py4JJavaError):
+        pipeline._metrics_total(spark, out)
+    _corrupt_one_file(entries)
+    with pytest.raises(Py4JJavaError):
+        checkpoint.read_entries(spark, entries).collect()
 
 
 def test_dependency_join(triples):
