@@ -70,11 +70,20 @@ general, and lagen.nu), plus the common SELECT forms:
   prop-annotations.rq), sequence ``p1/p2``, inverse ``^p``,
   alternation ``p1|p2``, negated property sets ``!p`` / ``!(p1|p2)``
   (forward members only) and parenthesized combinations with
-  quantifiers — bounded closure, default depth 3 for the unbounded
-  forms (the reference's part trees nest S / S.1 / S.1.1, same bound
-  as operators/canonicalize.annotation_closure).  Zero-length paths
-  range over the nodes of the path's own edge subgraph (documented
-  deviation from the spec's all-terms domain)
+  quantifiers.  ``{m,n}`` and ``?`` keep their exact bounds; ``*``,
+  ``+`` and ``{m,}`` are the full transitive closure at any depth,
+  cycles included.  A constant endpoint of a path that can match zero
+  edges matches itself, as in the spec (``<c> p* ?o`` yields ``c``).
+  Two documented deviations from the spec:
+
+  - zero-length paths between two variables (or nested inside a
+    larger path) range over the nodes of the path's own edge
+    subgraph, not over every term of the graph;
+  - a path matches as a SET of (start, end) pairs.  The spec
+    evaluates sequences and quantifier-free alternations as bags
+    (``?x p0/p1 ?y`` yields one solution per middle node); here
+    sequences and alternations ``dropDuplicates``, so each pair
+    appears once (tests/test_sparql.py pins it)
 
 Spark shape / scale notes:
 
@@ -89,9 +98,17 @@ Spark shape / scale notes:
   the query itself is disconnected.
 * A pattern bound by 2+ constants is a needle in the table => its scan
   is broadcast-hinted into the join.
-* ``p*``/``p+``/``p{m,n}`` closures are chained self-joins of the
-  edge subset (one pred-filtered scan reused), not a driver loop over
-  collected rows.
+* Every quantified path element goes through one closure routine
+  over its edge set (one pred-filtered scan reused).  ``{m,n}`` is
+  ``n - 1`` chained self-joins in one lazy plan.  ``*``/``+``/``{m,}``
+  is a semi-naive fixpoint over the edge set, materialized once
+  (``localCheckpoint``): each round joins only the previous round's
+  new pairs to the edges, anti-joins the result against the pairs
+  found so far and materializes it; it stops at the first empty
+  round, so a closure d edges deep costs d + 1 rounds, the last one
+  empty.  Those rounds run when ``sparql_query`` is called, not when
+  the returned DataFrame is collected, and they compute the closure
+  over the whole edge set even when an endpoint is a constant.
 * The ``obj_is_uri`` shadow columns that power isURI/isLiteral are
   only materialized when the query actually uses those functions, so
   the common case pays nothing.
@@ -158,7 +175,6 @@ class Pattern:
     s: Term
     p: Term     # kind 'iri'/'var', or 'path' with value = a PathAlt
     o: Term
-    path: tuple[int, int | None] | None = None  # (min, max); max None = default
 
 
 @dataclass
@@ -319,7 +335,7 @@ class _Parser:
                 if (where.unions or where.optionals or where.filters
                         or where.binds or where.exists or where.minuses
                         or where.values or where.subselects
-                        or any(p.path or p.p.kind == "path"
+                        or any(p.p.kind == "path"
                                for p in where.patterns)):
                     raise ValueError(
                         "sparql: CONSTRUCT WHERE shorthand allows only "
@@ -535,20 +551,19 @@ class _Parser:
             seqs.append(self._path_seq())
         return PathAlt(seqs)
 
-    def _pred(self) -> tuple[Term, tuple | None]:
-        """The predicate position: a var, a bare (possibly quantified)
-        IRI — the fast scan path — or a full path expression."""
+    def _pred(self) -> Term:
+        """The predicate position: a var, a bare IRI — the fast scan
+        path — or a path expression (a quantified IRI ``p*`` is the
+        one-element path ``(p)*``)."""
         if self.peek() in ("^", "(", "!"):
-            return Term("path", self._path_alt()), None
+            return Term("path", self._path_alt())
         p = self.term()
         quant = self._path_quant()
-        if self.peek() in ("/", "|"):
-            if p.kind != "iri":
-                raise ValueError(
-                    "sparql: property path elements must be IRIs")
-            first = PathElt(p.value, False, quant)
-            return Term("path", self._path_alt(first)), None
-        return p, quant
+        if quant is None and self.peek() not in ("/", "|"):
+            return p
+        if p.kind != "iri":
+            raise ValueError("sparql: property path elements must be IRIs")
+        return Term("path", self._path_alt(PathElt(p.value, False, quant)))
 
     def pattern_block(self) -> list[Pattern]:
         """One subject's statements: ``s p1 o1a, o1b ; p2 o2`` ->
@@ -557,11 +572,11 @@ class _Parser:
         s = self.term()
         pats: list[Pattern] = []
         while True:
-            p, path = self._pred()
-            pats.append(Pattern(s, p, self.term(), path))
+            p = self._pred()
+            pats.append(Pattern(s, p, self.term()))
             while self.peek() == ",":
                 self.next()
-                pats.append(Pattern(s, p, self.term(), path))
+                pats.append(Pattern(s, p, self.term()))
             if self.peek() == ";":
                 self.next()
                 if self.peek() in (None, ".", "}", ";"):   # trailing ;
@@ -1038,7 +1053,7 @@ def _uses_shadows(g: Group) -> frozenset:
 # ---------------------------------------------------------------------------
 # compilation
 
-def _pattern_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
+def _pattern_df(triples: DataFrame, pat: Pattern,
                 kinds: frozenset) -> tuple[DataFrame, int]:
     """One triple pattern -> (projected scan keyed by its variable
     columns, n_bound_constants).  Constants become pushdown filters.
@@ -1047,9 +1062,7 @@ def _pattern_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
     table's obj_is_uri flag) and ``__lang__v`` (obj_lang for obj
     bindings, NULL otherwise)."""
     if pat.p.kind == "path":
-        return _complex_path_df(triples, pat, max_path_depth, kinds)
-    if pat.path:
-        return _path_df(triples, pat, max_path_depth, kinds)
+        return _path_pattern_df(triples, pat, kinds)
     df = triples
     n_bound = 0
     sel: dict[str, str] = {}  # var -> source column
@@ -1074,110 +1087,67 @@ def _pattern_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
     return df.select(*cols), n_bound
 
 
-def _path_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
-             kinds: frozenset) -> tuple[DataFrame, int]:
-    """``?s p* ?o`` / ``p+`` / ``p{m,n}``: bounded closure of the
-    p-edge subset.  Zero-length paths (min 0) mean every node reaches
-    itself — for a constant endpoint that is just the constant row;
-    for the var-var form the node set of the p-subgraph."""
-    if pat.p.kind == "var":
-        raise ValueError("sparql: property path needs a constant predicate")
-    lo, hi = pat.path
-    hi = max_path_depth if hi is None else hi
-    edges = (triples.where(F.col("pred") == pat.p.value)
-             .select(F.col("subj").alias("_s"), F.col("obj").alias("_o"))
-             .dropDuplicates())
-    closure = edges if lo <= 1 and hi >= 1 else None
-    frontier = edges
-    for length in range(2, hi + 1):
-        frontier = (frontier.alias("f")
-                    .join(edges.alias("e"),
-                          F.col("f._o") == F.col("e._s"))
-                    .select(F.col("f._s").alias("_s"),
-                            F.col("e._o").alias("_o")))
-        if length >= lo:
-            closure = frontier if closure is None \
-                else closure.unionByName(frontier).dropDuplicates()
-    if lo == 0:
-        if pat.s.kind != "var":
-            zero = triples.sparkSession.createDataFrame(
-                [(pat.s.value, pat.s.value)], "_s string, _o string")
-        elif pat.o.kind != "var":
-            zero = triples.sparkSession.createDataFrame(
-                [(pat.o.value, pat.o.value)], "_s string, _o string")
-        else:
-            nodes = (edges.select(F.col("_s").alias("n"))
-                     .unionByName(edges.select(F.col("_o").alias("n")))
-                     .dropDuplicates())
-            zero = nodes.select(F.col("n").alias("_s"),
-                                F.col("n").alias("_o"))
-        closure = zero if closure is None \
-            else closure.unionByName(zero).dropDuplicates()
-    if closure is None:
-        raise ValueError(f"sparql: empty path quantifier {{{lo},{hi}}}")
-
-    df = closure
-    n_bound = 0
-    sel: dict[str, str] = {}
-    for term, col in ((pat.s, "_s"), (pat.o, "_o")):
-        if term.kind == "var":
-            if term.value in sel:
-                df = df.where(F.col(col) == F.col(sel[term.value]))
-            else:
-                sel[term.value] = col
-        else:
-            df = df.where(F.col(col) == term.value)
-            n_bound += 1
-    cols = [F.col(c).alias(v) for v, c in sel.items()]
-    # path endpoints are IRIs by construction (part-tree edges)
-    if "isuri" in kinds:
-        cols += [F.lit(True).alias(_SHADOW + v) for v in sel]
-    if "lang" in kinds:
-        cols += [F.lit(None).cast("string").alias(_LANG_SHADOW + v)
-                 for v in sel]
-    return df.select(*cols), n_bound
-
-
-def _edge_nodes(edges: DataFrame) -> DataFrame:
-    return (edges.select(F.col("_s").alias("n"))
-            .unionByName(edges.select(F.col("_o").alias("n")))
+def _hop(pairs: DataFrame, edges: DataFrame) -> DataFrame:
+    """Extend every (_s, _o) path in ``pairs`` by one edge."""
+    return (pairs.alias("f")
+            .join(edges.alias("e"), F.col("f._o") == F.col("e._s"))
+            .select(F.col("f._s").alias("_s"), F.col("e._o").alias("_o"))
             .dropDuplicates())
 
 
-def _edge_closure(edges: DataFrame, lo: int, hi: int) -> DataFrame:
-    """Paths of length max(lo,1)..hi over an (_s,_o) edge set; a
-    zero-length component (lo == 0) is the identity over the edge
-    subgraph's node set."""
-    closure = edges if lo <= 1 and hi >= 1 else None
+def _closure(edges: DataFrame, lo: int, hi: int | None) -> DataFrame:
+    """Pairs joined by a path of lo..hi edges over an (_s, _o) edge
+    set; hi None = unbounded.  A zero-length component (lo == 0) is the
+    identity over the edge subgraph's node set.
+
+    Bounded forms stay one lazy plan: the exact-length frontier is
+    extended hi - 1 times and the lengths lo..hi are unioned.
+    Unbounded forms run semi-naively from the paths of exactly
+    max(lo, 1) edges: each round extends only the previous round's new
+    pairs (the delta) by one edge and anti-joins the result against
+    the pairs found so far.  The edge set and each delta are
+    materialized with localCheckpoint, so a round neither re-reads the
+    edges' source nor carries a plan that grows with the depth.  The
+    loop ends at the first empty delta, which a finite graph always
+    reaches (cycles included): every round adds at least one new pair
+    and there are finitely many."""
+    first = max(lo, 1)
+    if hi is None:
+        edges = edges.localCheckpoint()
     frontier = edges
-    for length in range(2, hi + 1):
-        frontier = (frontier.alias("f")
-                    .join(edges.alias("e"),
-                          F.col("f._o") == F.col("e._s"))
-                    .select(F.col("f._s").alias("_s"),
-                            F.col("e._o").alias("_o")))
-        if length >= lo:
-            closure = frontier if closure is None \
-                else closure.unionByName(frontier).dropDuplicates()
+    for _ in range(first - 1):
+        frontier = _hop(frontier, edges)
+    if hi is None:
+        closure = delta = frontier.localCheckpoint()
+        while not delta.isEmpty():
+            delta = (_hop(delta, edges)
+                     .join(closure, ["_s", "_o"], "left_anti")
+                     .localCheckpoint())
+            closure = closure.unionByName(delta)
+    else:
+        closure = frontier if hi >= first else None
+        for _ in range(first, hi):
+            frontier = _hop(frontier, edges)
+            closure = closure.unionByName(frontier).dropDuplicates()
     if lo == 0:
-        zero = _edge_nodes(edges).select(F.col("n").alias("_s"),
-                                         F.col("n").alias("_o"))
-        closure = zero if closure is None \
-            else closure.unionByName(zero).dropDuplicates()
+        nodes = (edges.select(F.col("_s").alias("n"))
+                 .unionByName(edges.select(F.col("_o").alias("n"))))
+        zero = nodes.select(F.col("n").alias("_s"), F.col("n").alias("_o"))
+        closure = zero if closure is None else closure.unionByName(zero)
+        closure = closure.dropDuplicates()
     if closure is None:
         raise ValueError(f"sparql: empty path quantifier {{{lo},{hi}}}")
     return closure
 
 
-def _elt_edges(triples: DataFrame, elt: PathElt,
-               max_path_depth: int) -> DataFrame:
+def _elt_edges(triples: DataFrame, elt: PathElt) -> DataFrame:
     if elt.neg is not None:
         base = (triples.where(~F.col("pred").isin(elt.neg))
                 .select(F.col("subj").alias("_s"),
                         F.col("obj").alias("_o"))
                 .dropDuplicates())
     elif elt.group is not None:
-        base = _alt_edges(triples, elt.group, max_path_depth)
+        base = _alt_edges(triples, elt.group)
     else:
         base = (triples.where(F.col("pred") == elt.iri)
                 .select(F.col("subj").alias("_s"),
@@ -1187,14 +1157,11 @@ def _elt_edges(triples: DataFrame, elt: PathElt,
         base = base.select(F.col("_o").alias("_s"),
                            F.col("_s").alias("_o"))
     if elt.quant is not None:
-        lo, hi = elt.quant
-        base = _edge_closure(base, lo,
-                             max_path_depth if hi is None else hi)
+        base = _closure(base, *elt.quant)
     return base
 
 
-def _alt_edges(triples: DataFrame, alt: PathAlt,
-               max_path_depth: int) -> DataFrame:
+def _alt_edges(triples: DataFrame, alt: PathAlt) -> DataFrame:
     """A path expression -> its (_s, _o) edge DataFrame: sequences are
     chained joins (_o -> _s), alternatives union.  An alternation of
     plain forward predicates collapses to ONE isin-filtered scan
@@ -1211,7 +1178,7 @@ def _alt_edges(triples: DataFrame, alt: PathAlt,
     for seq in alt.seqs:
         df = None
         for elt in seq.elts:
-            e = _elt_edges(triples, elt, max_path_depth)
+            e = _elt_edges(triples, elt)
             df = e if df is None else (
                 df.alias("l")
                 .join(e.alias("r"), F.col("l._o") == F.col("r._s"))
@@ -1224,13 +1191,29 @@ def _alt_edges(triples: DataFrame, alt: PathAlt,
     return out.dropDuplicates()
 
 
-def _complex_path_df(triples: DataFrame, pat: Pattern,
-                     max_path_depth: int, kinds: frozenset,
+def _nullable(alt: PathAlt) -> bool:
+    """Does the path expression match a zero-length path?"""
+    return any(all((e.quant is not None and e.quant[0] == 0)
+                   or (e.group is not None and _nullable(e.group))
+                   for e in seq.elts)
+               for seq in alt.seqs)
+
+
+def _path_pattern_df(triples: DataFrame, pat: Pattern, kinds: frozenset,
                      ) -> tuple[DataFrame, int]:
-    """A pattern whose predicate is a path EXPRESSION (sequence /
-    inverse / alternation): compile the expression to an edge set,
-    then bind the endpoints like the simple-path case."""
-    df = _alt_edges(triples, pat.p.value, max_path_depth)
+    """A pattern whose predicate is a property path: compile the path
+    expression to an edge set, then bind the endpoints like a triple
+    pattern."""
+    alt = pat.p.value
+    df = _alt_edges(triples, alt)
+    const = next((t.value for t in (pat.s, pat.o) if t.kind != "var"),
+                 None)
+    if const is not None and _nullable(alt):
+        # spec: a zero-length path from a constant endpoint matches the
+        # constant itself, whether or not the graph contains it
+        zero = triples.sparkSession.createDataFrame(
+            [(const, const)], "_s string, _o string")
+        df = df.unionByName(zero).dropDuplicates()
     n_bound = 0
     sel: dict[str, str] = {}
     for term, col in ((pat.s, "_s"), (pat.o, "_o")):
@@ -1261,11 +1244,10 @@ def _drop_dup_shadows(df: DataFrame, sol_cols: set[str]) -> DataFrame:
 
 
 def _join_patterns(triples: DataFrame, pats: list[Pattern],
-                   max_path_depth: int, kinds: frozenset,
-                   ) -> DataFrame | None:
+                   kinds: frozenset) -> DataFrame | None:
     if not pats:
         return None
-    scans = [_pattern_df(triples, p, max_path_depth, kinds) for p in pats]
+    scans = [_pattern_df(triples, p, kinds) for p in pats]
     # selectivity-ordered greedy join: start from the most
     # constant-bound scan, always extend with a scan sharing a variable
     order = sorted(range(len(scans)), key=lambda i: -scans[i][1])
@@ -1398,11 +1380,11 @@ def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
     return out
 
 
-def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
+def _compile_group(triples: DataFrame, g: Group,
                    kinds: frozenset) -> DataFrame | None:
-    sol = _join_patterns(triples, g.patterns, max_path_depth, kinds)
+    sol = _join_patterns(triples, g.patterns, kinds)
     for sq in g.subselects:
-        inner = _compile_group(triples, sq.where, max_path_depth, kinds)
+        inner = _compile_group(triples, sq.where, kinds)
         if inner is None:
             raise ValueError("sparql: empty subquery WHERE group")
         sdf = _select_result(inner, sq)   # projected vars only
@@ -1413,8 +1395,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
             sol = sol.join(sdf, on=shared) if shared \
                 else sol.crossJoin(sdf)
     for branches in g.unions:
-        dfs = [_compile_group(triples, b, max_path_depth, kinds)
-               for b in branches]
+        dfs = [_compile_group(triples, b, kinds) for b in branches]
         if any(d is None for d in dfs):
             raise ValueError("sparql: empty UNION branch")
         cols = sorted({c for d in dfs for c in d.columns})
@@ -1432,7 +1413,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
     for opt in g.optionals:
         if sol is None:
             raise ValueError("sparql: OPTIONAL without a base pattern")
-        odf = _compile_group(triples, opt, max_path_depth, kinds)
+        odf = _compile_group(triples, opt, kinds)
         if odf is None:
             continue
         shared = [c for c in _var_cols(odf.columns) if c in sol.columns]
@@ -1455,7 +1436,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
     for positive, eg in g.exists:
         if sol is None:
             raise ValueError("sparql: EXISTS without a base pattern")
-        edf = _compile_group(triples, eg, max_path_depth, kinds)
+        edf = _compile_group(triples, eg, kinds)
         shared = [c for c in _var_cols(edf.columns) if c in sol.columns]
         if not shared:
             raise ValueError(
@@ -1467,7 +1448,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
     for mg in g.minuses:
         if sol is None:
             raise ValueError("sparql: MINUS without a base pattern")
-        mdf = _compile_group(triples, mg, max_path_depth, kinds)
+        mdf = _compile_group(triples, mg, kinds)
         shared = [c for c in _var_cols(mdf.columns) if c in sol.columns]
         if not shared:
             continue   # SPARQL spec: disjoint MINUS removes nothing
@@ -1478,8 +1459,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
     return sol
 
 
-def sparql_query(triples: DataFrame, query: str,
-                 max_path_depth: int = 3) -> DataFrame:
+def sparql_query(triples: DataFrame, query: str) -> DataFrame:
     """Run a SPARQL query (see module docstring for the subset) against
     a (subj, pred, obj[, obj_is_uri], ...) triples DataFrame.
 
@@ -1511,7 +1491,7 @@ def sparql_query(triples: DataFrame, query: str,
             out = tt.where(F.col("subj").isin(uris)
                            | F.col("obj").isin(uris))
         if dvars:
-            sol = _compile_group(t, ast.where, max_path_depth, kinds)
+            sol = _compile_group(t, ast.where, kinds)
             if sol is None:
                 raise ValueError("sparql: empty DESCRIBE WHERE group")
             nodes = None
@@ -1527,7 +1507,7 @@ def sparql_query(triples: DataFrame, query: str,
         if out is None:
             raise ValueError("sparql: DESCRIBE needs at least one target")
         return out.dropDuplicates()
-    sol = _compile_group(t, ast.where, max_path_depth, kinds)
+    sol = _compile_group(t, ast.where, kinds)
     if sol is None:
         raise ValueError("sparql: empty WHERE group")
     if ast.form == "ask":

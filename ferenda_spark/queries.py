@@ -2912,8 +2912,9 @@ def q_sparql_construct_annotations(spark, sf_dir):
     plan: the per-doc constant uri becomes ?root constrained to typed
     documents.  Scale shape: each triple pattern is a pred-filtered
     scan (the filter pushed into parquet), patterns join in
-    selectivity order, the isPartOf* closure is depth-bounded
-    self-joins of the tiny part-edge subset — never a driver loop."""
+    selectivity order, the isPartOf* closure is a semi-naive fixpoint
+    over the tiny part-edge subset: one join + anti-join round per
+    level of part nesting, plus the empty round that ends it."""
     from ferenda_spark.operators.sparql import sparql_query
     g = _kg_graph(spark, sf_dir)
     rq = f"""
@@ -3622,7 +3623,7 @@ WHERE regexp_matches(i.id, '0$')
 """
 
 ORACLE["sparql_construct_annotations"] = f"""
-WITH {_LIFT_CTE.strip()},
+WITH RECURSIVE {_LIFT_CTE.strip()},
 docs AS (SELECT '{BASE}res/' || source || '/' || doc_id::VARCHAR AS subj,
                 doc_id FROM documents),
 parts AS (
@@ -3640,16 +3641,13 @@ g AS (
   UNION ALL SELECT part, '{DCT}isPartOf', parent FROM parts
   UNION ALL SELECT s, '{DCT}references', part FROM refs
 ),
--- isPartOf* pairs: zero-length over the p-subgraph node set + 1..3 hops
-closure AS (
-  SELECT n AS s, n AS root FROM (
+-- isPartOf* pairs: zero-length over the p-subgraph node set, then
+-- the recursive closure (UNION = set semantics, so cycles terminate)
+closure(s, root) AS (
+  SELECT n, n FROM (
     SELECT part AS n FROM parts UNION SELECT parent FROM parts)
-  UNION SELECT part, parent FROM parts
-  UNION SELECT p1.part, p2.parent FROM parts p1
-        JOIN parts p2 ON p1.parent = p2.part
-  UNION SELECT p1.part, p3.parent FROM parts p1
-        JOIN parts p2 ON p1.parent = p2.part
-        JOIN parts p3 ON p2.parent = p3.part
+  UNION SELECT p.part, c.root FROM parts p JOIN closure c
+        ON p.parent = c.s
 ),
 roots AS (SELECT subj AS root FROM lift
           WHERE pred = '{RDF_TYPE}' AND obj = '{FOAF_DOC}'),

@@ -29,7 +29,9 @@ def test_parse_reference_annotations_rq():
     assert [(p.s.value, p.p.value, p.o.value) for p in g.patterns] == \
         [("s", "p", "o")]
     (left, right), = g.unions
-    assert left.patterns[0].path == (0, None)   # isPartOf*
+    (seq,) = left.patterns[0].p.value.seqs      # one isPartOf* element
+    (elt,) = seq.elts
+    assert (elt.iri, elt.quant) == (DCT + "isPartOf", (0, None))
     assert left.patterns[0].o.value == "http://ex.org/doc/1"
     assert right.patterns[1].p.value == DCT + "references"
 
@@ -589,6 +591,19 @@ def test_path_sequence(graph):
           ?x dct:references/dct:isPartOf ?y }""").collect()
     assert [(r.x, r.y) for r in rows] == \
         [("http://e/d2", "http://e/d1#S1")]
+
+
+def test_path_sequence_is_a_set(spark):
+    # a -p0-> m1 -p1-> b and a -p0-> m2 -p1-> b: SPARQL 1.1 evaluates
+    # a p0/p1 b as the join of two patterns over a fresh middle
+    # variable, a bag with 2 solutions (one per middle node).  The
+    # compiler's path edge sets are sets (module docstring), so 1 row.
+    g = spark.createDataFrame(
+        [("a", "p0", "m1"), ("a", "p0", "m2"),
+         ("m1", "p1", "b"), ("m2", "p1", "b")],
+        "subj string, pred string, obj string")
+    rows = sparql_query(g, "SELECT ?x ?y WHERE { ?x <p0>/<p1> ?y }")
+    assert [tuple(r) for r in rows.collect()] == [("a", "b")]
 
 
 def test_path_sequence_with_star(graph):
